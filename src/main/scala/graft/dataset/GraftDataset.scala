@@ -290,7 +290,7 @@ final class Relation(private val frame: DataFrame, val tableName: String,
       .orElse {
         // root chain via propagated _dlt_root_id
         val leftHasRoot = frame.columns.contains(Ids.DltRootId)
-        val rightHasRoot = dataset.store.read(other).columns.contains(Ids.DltRootId)
+        val rightHasRoot = dataset.store.schema(other).fieldNames.contains(Ids.DltRootId)
         if (rightHasRoot && frame.columns.contains(Ids.DltId))
           Some(col(Ids.DltId) === col(s"${prefix}__${Ids.DltRootId}"))
         else if (leftHasRoot && rightHasRoot)

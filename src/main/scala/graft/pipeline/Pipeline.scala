@@ -203,16 +203,12 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
   // (no local state file) against an existing destination resumes its
   // incremental cursors from the latest `_dlt_pipeline_state` row —
   // without this, a new machine silently re-loads everything.
-  locally {
-    import org.apache.spark.sql.functions.col
-    if (!states.exists(name))
-      store.readOption(dispositions.StateTable).foreach { df =>
-        df.filter(col("pipeline_name") === name)
-          .orderBy(col("version").desc).select("state").limit(1)
-          .collect().headOption.map(_.getString(0)).filter(_.nonEmpty)
-          .foreach(states.restore(name, _))
-      }
-  }
+  if (!states.exists(name) && store.exists(dispositions.StateTable))
+    store.readDriverRows(dispositions.StateTable)
+      .filter(_.get("pipeline_name").contains(name))
+      .maxByOption(_("version").asInstanceOf[Number].longValue())
+      .flatMap(_.get("state")).map(_.toString).filter(_.nonEmpty)
+      .foreach(states.restore(name, _))
 
   def dataset: GraftDataset = new GraftDataset(store, registry, spark)
 
@@ -622,8 +618,10 @@ final class Pipeline(val name: String, val root: String, val spark: SparkSession
 
     // contract enforcement against what's already stored
     val enforced = tables.map { case (t, df) =>
-      val gated = store.readOption(t) match {
-        case Some(existing) => Contracts.enforce(df, existing.schema, r.contract)
+      val existing = Option.when(store.exists(t) && store.segments(t).nonEmpty)(
+        store.schema(t))
+      val gated = existing match {
+        case Some(schema) => Contracts.enforce(df, schema, r.contract)
         case None =>
           if (!Contracts.allowNewTable(t, exists = false, r.contract)) null else df
       }

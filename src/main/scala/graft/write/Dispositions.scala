@@ -248,8 +248,8 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
   def recordVersion(schemaName: String, versionHash: String,
                     schemaJson: String): Unit = {
     val already = seenVersionHashes(versionHash) ||
-      store.readOption(VersionTable).exists(df =>
-        df.filter(df("version_hash") === versionHash).limit(1).count() > 0)
+      (store.exists(VersionTable) && store.readDriverRows(VersionTable)
+        .exists(_.get("version_hash").contains(versionHash)))
     seenVersionHashes += versionHash
     if (!already) {
       val version = nextVersion(VersionTable)
@@ -268,11 +268,13 @@ final class Dispositions(store: TableStore, spark: SparkSession) {
     * committed alongside the load so a fresh environment can restore
     * incremental cursors from the destination alone. */
   /** Next monotone version: max(version)+1, not count() — counts break
-    * after deletes and under merged histories. */
+    * after deletes and under merged histories. Every append writes
+    * max+1, so the newest segment holds the maximum (after a compaction
+    * it holds every row): a driver read of that one file, no Spark job. */
   private def nextVersion(table: String): Long =
-    store.readOption(table).flatMap(df =>
-      Option(df.agg(max(col("version"))).head().get(0))
-        .map(_.asInstanceOf[Number].longValue())).getOrElse(0L) + 1
+    (if (!store.exists(table)) Nil else store.readDriverRowsLast(table))
+      .flatMap(_.get("version")).map(_.asInstanceOf[Number].longValue())
+      .maxOption.getOrElse(0L) + 1
 
   def recordState(pipelineName: String, loadId: String, stateJson: String): Unit = {
     val version = nextVersion(StateTable)

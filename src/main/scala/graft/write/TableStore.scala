@@ -9,6 +9,7 @@ import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max, min}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Column min/max carried in the manifest per segment — the pruning
@@ -25,8 +26,11 @@ final case class ColStats(min: String, max: String, numeric: Boolean) {
 }
 
 /** One committed data segment: a parquet directory plus optional
-  * per-column stats (absent for imported/legacy segments → never pruned). */
-final case class Segment(name: String, stats: Map[String, ColStats])
+  * per-column stats (absent for imported/legacy segments → never pruned)
+  * and the Spark schema its files were written with (absent for
+  * imported/legacy segments → inferred from the footers at read). */
+final case class Segment(name: String, stats: Map[String, ColStats],
+    schema: Option[StructType] = None)
 
 /** A pending segment for [[TableStore.commitSegments]]. */
 final case class SegmentWrite(df: DataFrame, statsFor: Seq[String] = Nil,
@@ -39,8 +43,15 @@ final case class SegmentWrite(df: DataFrame, statsFor: Seq[String] = Nil,
   * formats, keyed by value instead of row position: deleting N rows
   * from a huge child table costs O(ids) written, not O(table)
   * rewritten. `covered` pins the generation — segments appended AFTER
-  * the tombstone are not affected, so a re-inserted key survives. */
-final case class Tombstone(name: String, column: String, covered: Set[String])
+  * the tombstone are not affected, so a re-inserted key survives.
+  * `schema` is the id file's Spark schema (absent on legacy manifests). */
+final case class Tombstone(name: String, column: String, covered: Set[String],
+    schema: Option[StructType] = None)
+
+/** One parsed manifest: live segments and tombstones, each carrying the
+  * schema its line references. */
+private final case class Manifest(segments: Seq[Segment],
+    tombstones: Seq[Tombstone])
 
 /** A minimal lakehouse: one directory per dataset, one manifest-committed
   * parquet table per subdirectory.
@@ -51,6 +62,27 @@ final case class Tombstone(name: String, column: String, covered: Set[String])
   *   <root>/<table>/manifest-<n>.txt             live segments + stats
   *   <root>/<table>/_CURRENT                     name of current manifest
   * }}}
+  *
+  * Manifest lines, one entry each (`enc` = URL-encoding, `\t` a tab):
+  * {{{
+  *   @\t<id>\td\t<ddl>                                 schema <id>, StructType.toDDL
+  *   @\t<id>\tj\t<json>                                schema <id>, StructType.json
+  *   <name>[\t<col>,<n|s>,<encMin>,<encMax>[;...][\t<id>]]  data segment
+  *   !\t<encName>\t<encCol>\t<encCovered,...>[\t<id>]     tombstone
+  * }}}
+  * Each distinct schema is written once per manifest, as DDL unless
+  * `fromDDL(toDDL(s)) != s` (field metadata beyond a comment), then as
+  * JSON. A segment or tombstone line ends with the id of the schema its
+  * files were written with, and reads pass that schema to Spark, merging
+  * differing segments in manifest (commit) order with the merge parquet's
+  * `mergeSchema` footer read uses; that read merges in file-path order,
+  * so it yields the same fields, in an order set by the random segment
+  * names. Planning a read therefore launches no footer-inference job, in
+  * a fresh process, at an old snapshot and on evolved tables alike. A
+  * line without an id (imported files, manifests written before schemas
+  * were recorded) falls back to the `mergeSchema` footer read. A
+  * `_CURRENT` naming a manifest that does not exist, or a schema line
+  * that does not parse, throws `IllegalStateException` naming the file.
   *
   * Commits are atomic: segments are written first, then the new manifest,
   * then `_CURRENT` is swapped via atomic rename — readers always resolve a
@@ -82,37 +114,6 @@ final case class Tombstone(name: String, column: String, covered: Set[String])
   * action — no extra scan of the data.
   */
 final class TableStore(val root: String, val spark: SparkSession) {
-
-  /** Per-segment parquet schema memo, keyed by resolved segment path.
-    * `mergeSchema=true` reads launch a footer-merge Spark job over
-    * every segment file BEFORE the query proper (at 100 TB that job
-    * reads a footer per data file; at the bench fixture it is a fixed
-    * ~30-150 ms driver round-trip per `read()` — the composition gates
-    * pay it dozens of times per query). The store itself wrote nearly
-    * every segment it later reads, so [[writeLayout]] records the
-    * written schema (deep-nullable, matching what parquet inference
-    * returns) and [[readSegments]] passes it explicitly when EVERY
-    * requested segment is memoized with ONE identical schema — the
-    * same schema the footer merge would have produced. Any unknown or
-    * differing segment (foreign imports, schema evolution) falls back
-    * to the mergeSchema read, so evolution semantics are untouched.
-    * Metadata only — never row data — and scoped to this store
-    * instance, so a fresh process re-infers from the files. */
-  private val segmentSchemas =
-    new java.util.concurrent.ConcurrentHashMap[Path, StructType]()
-
-  /** What parquet inference returns for a written df schema: every
-    * field and container element nullable ("when reading Parquet
-    * files, all columns are automatically converted to be nullable"). */
-  private def deepNullable(dt: DataType): DataType = dt match {
-    case s: StructType => StructType(s.fields.map(f =>
-      f.copy(dataType = deepNullable(f.dataType), nullable = true)))
-    case a: ArrayType =>
-      a.copy(elementType = deepNullable(a.elementType), containsNull = true)
-    case m: MapType => m.copy(keyType = deepNullable(m.keyType),
-      valueType = deepNullable(m.valueType), valueContainsNull = true)
-    case other => other
-  }
 
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -183,21 +184,28 @@ final class TableStore(val root: String, val spark: SparkSession) {
     * applied — immutable segments make this free: no data is copied or
     * reconstructed, the old manifest simply still describes it. */
   def readAt(table: String, snapshot: Long): DataFrame = {
-    val lines = manifestLinesAt(table, snapshot)
-    val segs = lines.filterNot(_.startsWith("!")).map(decodeSegment)
-    val tombs = lines.filter(_.startsWith("!")).flatMap(decodeTombstone)
-    require(segs.nonEmpty, s"snapshot $snapshot of $table is empty")
-    appliedRead(table, segs, tombs)
+    val m = manifestAt(table, snapshot)
+    require(m.segments.nonEmpty, s"snapshot $snapshot of $table is empty")
+    appliedRead(table, m.segments, m.tombstones)
   }
 
-  /** One snapshot's manifest lines — the shared parse behind [[readAt]]
-    * and [[readDriverRowsAt]]. */
-  private def manifestLinesAt(table: String, snapshot: Long): Seq[String] = {
+  /** One snapshot's manifest — the shared parse behind [[readAt]] and
+    * [[readDriverRowsAt]]. */
+  private def manifestAt(table: String, snapshot: Long): Manifest = {
     val manifest = tableDir(table).resolve(s"manifest-$snapshot.txt")
     require(Files.exists(manifest),
       s"snapshot $snapshot of $table does not exist (vacuumed?)")
-    new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    parseManifest(manifest)
+  }
+
+  /** The current snapshot's merged schema — what `read(table).schema`
+    * returns, field order included, without building the read plan.
+    * Comes from the manifest; only a table holding segments with no
+    * recorded schema (imports, legacy manifests) reads footers. */
+  def schema(table: String): StructType = {
+    val segs = segments(table)
+    require(segs.nonEmpty, s"table $table does not exist in $root")
+    schemaOf(table, segs)
   }
 
   /** CHANGE FEED between two snapshots: per-key inserts and deletes
@@ -226,26 +234,31 @@ final class TableStore(val root: String, val spark: SparkSession) {
   def readSegmentsApplied(table: String, segs: Seq[Segment]): DataFrame =
     appliedRead(table, segs, currentTombstones(table))
 
+  /** Every segment group reads with the merged schema of all of `segs`,
+    * so the groups union by position and the result's schema is exactly
+    * [[schemaOf]]. Groups are taken in manifest order; one group's
+    * tombstones on one column are one multi-path scan, so a table with
+    * k tombstones plans at most k tombstone scans. The anti-join keeps
+    * the segment's column order (a `USING` join would move the
+    * tombstone column first). */
   private def appliedRead(table: String, segs: Seq[Segment],
       tombs: Seq[Tombstone]): DataFrame = {
     val relevant = tombs.filter(t => segs.exists(s => t.covered(s.name)))
     if (relevant.isEmpty) readSegments(table, segs)
     else {
-      val groups = segs.groupBy(s =>
-        relevant.filter(_.covered(s.name)).map(_.name).toSet)
-      groups.map { case (tnames, gsegs) =>
-        val base = readSegments(table, gsegs)
-        relevant.filter(t => tnames(t.name)).groupBy(_.column)
-          .foldLeft(base) { case (acc, (c, ts)) =>
-            if (!acc.columns.contains(c)) acc
-            else {
-              val ids = ts.map(t =>
-                  spark.read.parquet(resolve(table, t.name).toString))
-                .reduce(_ unionByName _).select(c).distinct()
-              acc.join(ids, Seq(c), "left_anti")
-            }
+      val full = schemaOf(table, segs)
+      val cover = segs.map(s => s -> relevant.filter(_.covered(s.name)))
+      cover.map(_._2).distinct.map { ts =>
+        val base = spark.read.schema(full).parquet(
+          cover.collect { case (s, `ts`) => resolve(table, s.name).toString }: _*)
+        ts.map(_.column).distinct.filter(full.fieldNames.contains)
+          .foldLeft(base) { (acc, c) =>
+            val q = s"`${c.replace("`", "``")}`"
+            val ids = scan(table, ts.collect {
+              case t if t.column == c => t.name -> t.schema }).select(q).distinct()
+            acc.join(ids, acc(q) === ids(q), "left_anti")
           }
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      }.reduce(_ union _)
     }
   }
 
@@ -261,11 +274,9 @@ final class TableStore(val root: String, val spark: SparkSession) {
   def appendWithTombstone(table: String, df: DataFrame, tombColumn: String,
       ids: DataFrame, statsFor: Seq[String] = Nil): Unit = locked(table) {
     val existing = currentSegments(table)
-    val idSeg = writeTombstoneSegment(table, tombColumn, ids)
+    val tomb = writeTombstone(table, tombColumn, ids, existing)
     val dataSeg = writeSegment(table, df, statsFor)
-    commit(table, existing :+ dataSeg,
-      currentTombstones(table) :+
-        Tombstone(idSeg, tombColumn, existing.map(_.name).toSet))
+    commit(table, existing :+ dataSeg, currentTombstones(table) :+ tomb)
   }
 
   /** The tombstone id-file write both tombstoning commits share.
@@ -274,15 +285,16 @@ final class TableStore(val root: String, val spark: SparkSession) {
     * Bloom filter on the id column: point reads probe tombstone files
     * for membership ("is this id dead?") — the bloom turns that probe
     * into a footer check instead of an id-file scan. */
-  private def writeTombstoneSegment(table: String, tombColumn: String,
-      ids: DataFrame): String = {
+  private def writeTombstone(table: String, tombColumn: String,
+      ids: DataFrame, covered: Seq[Segment]): Tombstone = {
     require(ids.columns.toSeq == Seq(tombColumn),
       s"tombstone ids must be a single '$tombColumn' column")
     val idSeg = s"data/${UUID.randomUUID().toString.take(12)}-tomb"
     ids.distinct().repartition(1).write.mode(SaveMode.Overwrite)
       .option(s"parquet.bloom.filter.enabled#$tombColumn", "true")
       .parquet(tableDir(table).resolve(idSeg).toString)
-    idSeg
+    Tombstone(idSeg, tombColumn, covered.map(_.name).toSet,
+      Some(ColumnBridge.asNullable(ids.schema)))
   }
 
   /** Tombstone-only commit — the DELETE-only sibling of
@@ -303,13 +315,12 @@ final class TableStore(val root: String, val spark: SparkSession) {
       ids: DataFrame): Unit = locked(table) {
     val existing = currentSegments(table)
     require(existing.nonEmpty, s"table $table does not exist in $root")
-    require(read(table).columns.contains(tombColumn),
+    val columns = schemaOf(table, existing).fieldNames
+    require(columns.contains(tombColumn),
       s"table $table has no '$tombColumn' column to delete by " +
-        s"(columns: ${read(table).columns.mkString(", ")})")
-    val idSeg = writeTombstoneSegment(table, tombColumn, ids)
-    commit(table, existing,
-      currentTombstones(table) :+
-        Tombstone(idSeg, tombColumn, existing.map(_.name).toSet))
+        s"(columns: ${columns.mkString(", ")})")
+    commit(table, existing, currentTombstones(table) :+
+      writeTombstone(table, tombColumn, ids, existing))
   }
 
   def readOption(table: String): Option[DataFrame] =
@@ -318,23 +329,35 @@ final class TableStore(val root: String, val spark: SparkSession) {
   /** The live segments of `table` (with their pruning stats). */
   def segments(table: String): Seq[Segment] = currentSegments(table)
 
-  /** Read a subset of segments (merge reads only the touched ones).
-    * When every requested segment's written schema is memoized and
-    * identical (see [[segmentSchemas]]), that schema is passed
-    * explicitly — same result as the footer merge of same-schema
-    * files, minus the pre-query footer job; anything else keeps the
-    * mergeSchema read (widen-on-read evolution semantics). */
+  /** Read a subset of segments (merge reads only the touched ones)
+    * with their recorded schemas merged in manifest order — the fields
+    * a `mergeSchema` footer read returns, without its footer job. */
   def readSegments(table: String, segs: Seq[Segment]): DataFrame = {
     require(segs.nonEmpty, "readSegments needs at least one segment")
-    val paths = segs.map(s => resolve(table, s.name))
-    val known = paths.map(p => Option(segmentSchemas.get(p)))
-    val distinctKnown = known.flatten.distinct
-    if (known.forall(_.isDefined) && distinctKnown.size == 1)
-      spark.read.schema(distinctKnown.head)
-        .parquet(paths.map(_.toString): _*)
-    else spark.read.option("mergeSchema", "true")
-      .parquet(paths.map(_.toString): _*)
+    scan(table, segs.map(s => s.name -> s.schema))
   }
+
+  /** Entries' parquet files read with their recorded schemas merged in
+    * order; a `mergeSchema` footer read when any entry has none. */
+  private def scan(table: String,
+      entries: Seq[(String, Option[StructType])]): DataFrame = {
+    val paths = entries.map(e => resolve(table, e._1).toString)
+    mergedSchema(entries.map(_._2)) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+  }
+
+  /** The recorded schemas merged in order, or None if any is missing. */
+  private def mergedSchema(schemas: Seq[Option[StructType]]): Option[StructType] =
+    Option.when(schemas.forall(_.isDefined)) {
+      val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+      schemas.flatten.distinct.reduce(ColumnBridge.mergeSchemas(_, _, caseSensitive))
+    }
+
+  /** The merged schema of `segs` — [[readSegments]]' schema. */
+  private def schemaOf(table: String, segs: Seq[Segment]): StructType =
+    mergedSchema(segs.map(_.schema)).getOrElse(readSegments(table, segs).schema)
 
   /** Append: write a new segment, commit old segments + new one.
     * `statsFor` columns get min/max stats for later merge pruning.
@@ -423,8 +446,6 @@ final class TableStore(val root: String, val spark: SparkSession) {
       Files.createDirectories(dst.getParent)
       val src = resolve(from, s.name)
       Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      // the bytes moved, the schema did not — carry the memo entry
-      Option(segmentSchemas.remove(src)).foreach(segmentSchemas.put(dst, _))
       s.copy(name = segName)
     }
     commit(to, moved)
@@ -473,8 +494,6 @@ final class TableStore(val root: String, val spark: SparkSession) {
           }
         } finally walk.close()
       }
-      // byte-for-byte copy: the source's memoized schema holds verbatim
-      Option(segmentSchemas.get(src)).foreach(segmentSchemas.put(dstDir, _))
       s.copy(name = segName)
     }
     commit(to, copied)
@@ -489,9 +508,11 @@ final class TableStore(val root: String, val spark: SparkSession) {
   /** Commit a DRIVER-WRITTEN parquet file as a new segment — the
     * tiny-append fast path for system-table ledger rows (see
     * [[TinyParquet]]): `write` receives the destination path inside the
-    * table's data dir; the commit is the same atomic manifest swap an
-    * executor-written segment gets. */
-  def appendDriverFile(table: String)(write: java.nio.file.Path => Unit): Unit =
+    * table's data dir and returns the file's Spark schema (what
+    * [[TinyParquet.write]] returns), which the manifest records; the
+    * commit is the same atomic manifest swap an executor-written
+    * segment gets. */
+  def appendDriverFile(table: String)(write: Path => StructType): Unit =
     locked(table) {
       val seg = writeDriverSegment(table)(write)
       commit(table, currentSegments(table) :+ seg, currentTombstones(table))
@@ -502,19 +523,18 @@ final class TableStore(val root: String, val spark: SparkSession) {
     * segment list (tombstones cleared, like [[overwrite]]). The
     * single-row-config fast path (index metadata, collection manifests)
     * — a Spark job per one-row rewrite is pure fixed overhead. */
-  def overwriteDriverFile(table: String)(write: java.nio.file.Path => Unit): Unit =
+  def overwriteDriverFile(table: String)(write: Path => StructType): Unit =
     locked(table) {
       val seg = writeDriverSegment(table)(write)
       commit(table, Seq(seg))
     }
 
   private def writeDriverSegment(table: String)(
-      write: java.nio.file.Path => Unit): Segment = {
+      write: Path => StructType): Segment = {
     val name = s"data/${UUID.randomUUID().toString.take(12)}.parquet"
     val p = tableDir(table).resolve(name)
     Files.createDirectories(p.getParent)
-    write(p)
-    Segment(name, Map.empty)
+    Segment(name, Map.empty, Some(write(p)))
   }
 
   /** Driver-side read of a TINY table's current rows — no Spark job.
@@ -551,10 +571,10 @@ final class TableStore(val root: String, val spark: SparkSession) {
 
   /** [[readDriverRows]] at a pinned snapshot (see [[readAt]]). */
   def readDriverRowsAt(table: String, snapshot: Long): Seq[Map[String, Any]] = {
-    val lines = manifestLinesAt(table, snapshot)
-    require(!lines.exists(_.startsWith("!")),
+    val m = manifestAt(table, snapshot)
+    require(m.tombstones.isEmpty,
       s"readDriverRowsAt($table): snapshot carries tombstones — read via Spark")
-    lines.map(decodeSegment).flatMap(s => readSegmentDriver(table, s))
+    m.segments.flatMap(s => readSegmentDriver(table, s))
   }
 
   /** One segment's rows via the driver parquet reader — a segment is
@@ -628,7 +648,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
   private def tombstoneContains(table: String, t: Tombstone,
       value: String): Boolean =
     Try {
-      val df = spark.read.parquet(resolve(table, t.name).toString)
+      val df = scan(table, Seq(t.name -> t.schema))
       val dt = df.schema(t.column).dataType
       !df.filter(col(t.column) === org.apache.spark.sql.functions.lit(value)
         .cast(dt)).isEmpty
@@ -645,13 +665,13 @@ final class TableStore(val root: String, val spark: SparkSession) {
   def compact(table: String, maxSegments: Int = 16): Boolean = locked(table) {
     // one manifest read decides the (common) no-op case — this runs
     // after every chain child load, so the guard must not re-list state
-    val lines = manifestLines(table)
-    val segs = lines.filterNot(_.startsWith("!")).map(decodeSegment)
-    if (segs.size <= maxSegments && lines.count(_.startsWith("!")) <= maxSegments)
+    val m = currentManifest(table)
+    if (m.segments.size <= maxSegments && m.tombstones.size <= maxSegments)
       false
     else {
-      val statCols = segs.flatMap(_.stats.keys).distinct
-      commit(table, Seq(writeSegment(table, readSegmentsApplied(table, segs), statCols)))
+      val statCols = m.segments.flatMap(_.stats.keys).distinct
+      commit(table, Seq(writeSegment(table,
+        appliedRead(table, m.segments, m.tombstones), statCols)))
       true
     }
   }
@@ -717,14 +737,13 @@ final class TableStore(val root: String, val spark: SparkSession) {
     def referenced(manifest: String): Set[String] = {
       val p = dir.resolve(manifest)
       if (!Files.exists(p)) Set.empty
-      else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .linesIterator.map(_.trim).filter(_.nonEmpty).flatMap { line =>
-          val name = if (line.startsWith("!")) dec(line.split("\t", 4)(1))
-                     else line.split("\t", 2)(0)
-          // only names under THIS table's data/ dir are vacuum-managed;
-          // absolute pointers (imports, clone sources) live elsewhere
-          if (Paths.get(name).isAbsolute) None else Some(name)
-        }.toSet
+      else {
+        val m = parseManifest(p)
+        // only names under THIS table's data/ dir are vacuum-managed;
+        // absolute pointers (imports, clone sources) live elsewhere
+        (m.segments.map(_.name) ++ m.tombstones.map(_.name))
+          .filterNot(Paths.get(_).isAbsolute).toSet
+      }
     }
     val live = retained.flatMap(referenced).toSet
     val dataDir = dir.resolve("data")
@@ -736,7 +755,6 @@ final class TableStore(val root: String, val spark: SparkSession) {
           try w.sorted(java.util.Comparator.reverseOrder())
             .iterator().asScala.foreach(Files.delete)
           finally w.close()
-          segmentSchemas.remove(seg) // the files are gone; drop the memo
           deleted += 1
         }
       }
@@ -838,11 +856,13 @@ final class TableStore(val root: String, val spark: SparkSession) {
   def drop(table: String): Unit = locked(table) {
     val dir = tableDir(table)
     if (Files.exists(dir)) {
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+      // _CURRENT first: the table disappears atomically, and an unlocked
+      // reader never finds a _CURRENT naming an already-deleted manifest
+      Files.deleteIfExists(dir.resolve("_CURRENT"))
+      val w = Files.walk(dir)
+      try w.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(Files.delete)
-      // drop the dead schema memo entries with the files — a long-lived
-      // process creating and dropping tables must not accumulate them
-      segmentSchemas.keySet.removeIf(_.startsWith(dir))
+      finally w.close()
     }
   }
 
@@ -854,7 +874,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
       currentSegments(table) match {
         case Nil => ()
         case segs =>
-          val schema = readSegments(table, segs).schema
+          val schema = schemaOf(table, segs)
           val empty = spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
           commit(table, Seq(writeSegment(table, empty.coalesce(1), Nil)))
@@ -919,8 +939,6 @@ final class TableStore(val root: String, val spark: SparkSession) {
       (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }
     writer.parquet(tableDir(table).resolve(seg).toString)
-    segmentSchemas.put(tableDir(table).resolve(seg),
-      deepNullable(layout.schema).asInstanceOf[StructType])
     val stats = obs.map { o =>
       val m = o.get
       cols.flatMap { c =>
@@ -932,7 +950,7 @@ final class TableStore(val root: String, val spark: SparkSession) {
         }
       }.toMap
     }.getOrElse(Map.empty)
-    Segment(seg, stats)
+    Segment(seg, stats, Some(ColumnBridge.asNullable(layout.schema)))
   }
 
   private def resolve(table: String, name: String): Path = {
@@ -943,57 +961,109 @@ final class TableStore(val root: String, val spark: SparkSession) {
   private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
-  // manifest line: <name>[\t<col>,<n|s>,<encMin>,<encMax>[;...]]
-  // tombstone line: !\t<encName>\t<encCol>\t<encCovered,...>
-  private def encodeSegment(s: Segment): String = {
+  // line grammar: see the class doc
+  private def encodeSegment(s: Segment, ids: Map[StructType, Int]): String = {
     val stats = s.stats.toSeq.sortBy(_._1).map { case (c, st) =>
       Seq(enc(c), if (st.numeric) "n" else "s", enc(st.min), enc(st.max)).mkString(",")
     }.mkString(";")
-    if (stats.isEmpty) s.name else s"${s.name}\t$stats"
+    s.schema match {
+      case Some(sc) => s"${s.name}\t$stats\t${ids(sc)}"
+      case None => if (stats.isEmpty) s.name else s"${s.name}\t$stats"
+    }
   }
 
-  private def encodeTombstone(t: Tombstone): String =
-    Seq("!", enc(t.name), enc(t.column),
-      t.covered.toSeq.sorted.map(enc).mkString(",")).mkString("\t")
+  private def encodeTombstone(t: Tombstone, ids: Map[StructType, Int]): String =
+    (Seq("!", enc(t.name), enc(t.column),
+      t.covered.toSeq.sorted.map(enc).mkString(",")) ++
+      t.schema.map(ids(_).toString)).mkString("\t")
 
-  private def decodeTombstone(line: String): Option[Tombstone] =
+  /** DDL when it round-trips and fits on one manifest line, else JSON
+    * (which escapes control characters). */
+  private def encodeSchema(id: Int, s: StructType): String = {
+    val ddl = s.toDDL
+    val asDdl = !ddl.exists(c => c == '\t' || c == '\n' || c == '\r') &&
+      Try(StructType.fromDDL(ddl) == s).getOrElse(false)
+    if (asDdl) s"@\t$id\td\t$ddl" else s"@\t$id\tj\t${s.json}"
+  }
+
+  private def malformed(file: Path, line: String): Nothing =
+    throw new IllegalStateException(
+      s"manifest $file holds a malformed line '$line' — restore the file " +
+        "or point _CURRENT at a retained manifest to recover")
+
+  private def decodeSchema(file: Path, line: String): (String, StructType) =
     line.split("\t", 4) match {
-      case Array("!", name, c, covered) =>
-        Some(Tombstone(dec(name), dec(c),
-          covered.split(",").filter(_.nonEmpty).map(dec).toSet))
-      case _ => None
+      case Array("@", id, kind, text) =>
+        val parsed = Try(kind match {
+          case "d" => StructType.fromDDL(text)
+          case "j" => DataType.fromJson(text) match { case st: StructType => st }
+        })
+        id -> parsed.getOrElse(malformed(file, line))
+      case _ => malformed(file, line)
     }
 
-  private def decodeSegment(line: String): Segment = line.split("\t", 2) match {
-    case Array(name) => Segment(name, Map.empty)
-    case Array(name, stats) =>
-      val cols = stats.split(";").filter(_.nonEmpty).flatMap { part =>
-        part.split(",", 4) match {
-          case Array(c, kind, mn, mx) =>
-            Some(dec(c) -> ColStats(dec(mn), dec(mx), kind == "n"))
-          case _ => None
-        }
-      }.toMap
-      Segment(name, cols)
+  private def decodeTombstone(line: String,
+      ref: String => Option[StructType]): Option[Tombstone] = {
+    def tomb(name: String, c: String, covered: String, schema: Option[StructType]) =
+      Some(Tombstone(dec(name), dec(c),
+        covered.split(",").filter(_.nonEmpty).map(dec).toSet, schema))
+    line.split("\t", 5) match {
+      case Array("!", name, c, covered) => tomb(name, c, covered, None)
+      case Array("!", name, c, covered, id) => tomb(name, c, covered, ref(id))
+      case _ => None
+    }
   }
 
-  private def manifestLines(table: String): Seq[String] = {
+  private def decodeSegment(line: String,
+      ref: String => Option[StructType]): Segment = {
+    def stats(enc: String) = enc.split(";").filter(_.nonEmpty).flatMap { part =>
+      part.split(",", 4) match {
+        case Array(c, kind, mn, mx) =>
+          Some(dec(c) -> ColStats(dec(mn), dec(mx), kind == "n"))
+        case _ => None
+      }
+    }.toMap
+    line.split("\t", 3) match {
+      case Array(name) => Segment(name, Map.empty)
+      case Array(name, st) => Segment(name, stats(st))
+      case Array(name, st, id) => Segment(name, stats(st), ref(id))
+    }
+  }
+
+  private def parseManifest(file: Path): Manifest = {
+    val lines = new String(Files.readAllBytes(file), StandardCharsets.UTF_8)
+      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    val (schemaLines, entries) = lines.partition(_.startsWith("@"))
+    val schemas = schemaLines.map(decodeSchema(file, _)).toMap
+    def ref(id: String): Option[StructType] =
+      Some(schemas.getOrElse(id, malformed(file, s"<reference to schema $id>")))
+    val (tombLines, segLines) = entries.partition(_.startsWith("!"))
+    Manifest(segLines.map(decodeSegment(_, ref)),
+      tombLines.flatMap(decodeTombstone(_, ref)))
+  }
+
+  /** The manifest `_CURRENT` names (empty when the table does not
+    * exist). A `_CURRENT` naming a missing manifest throws: reading the
+    * table as absent would silently lose every committed row. */
+  private def currentManifest(table: String): Manifest = {
     val cur = tableDir(table).resolve("_CURRENT")
-    if (!Files.exists(cur)) Nil
+    if (!Files.exists(cur)) Manifest(Nil, Nil)
     else {
       val manifest = tableDir(table).resolve(
         new String(Files.readAllBytes(cur), StandardCharsets.UTF_8).trim)
-      if (!Files.exists(manifest)) Nil
-      else new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
-        .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+      if (!Files.exists(manifest))
+        throw new IllegalStateException(s"$cur names manifest $manifest, " +
+          "which does not exist — point _CURRENT at a retained manifest " +
+          "to recover")
+      parseManifest(manifest)
     }
   }
 
   private def currentSegments(table: String): Seq[Segment] =
-    manifestLines(table).filterNot(_.startsWith("!")).map(decodeSegment)
+    currentManifest(table).segments
 
   private def currentTombstones(table: String): Seq[Tombstone] =
-    manifestLines(table).filter(_.startsWith("!")).flatMap(decodeTombstone)
+    currentManifest(table).tombstones
 
   private def commit(table: String, segments: Seq[Segment],
       tombstones: Seq[Tombstone] = Nil): Unit = {
@@ -1001,7 +1071,10 @@ final class TableStore(val root: String, val spark: SparkSession) {
     Files.createDirectories(dir)
     val n = System.nanoTime()
     val manifest = s"manifest-$n.txt"
-    val lines = segments.map(encodeSegment) ++ tombstones.map(encodeTombstone)
+    val schemas = (segments.flatMap(_.schema) ++ tombstones.flatMap(_.schema)).distinct
+    val ids = schemas.zipWithIndex.toMap
+    val lines = schemas.zipWithIndex.map { case (s, i) => encodeSchema(i, s) } ++
+      segments.map(encodeSegment(_, ids)) ++ tombstones.map(encodeTombstone(_, ids))
     Files.write(dir.resolve(manifest),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)

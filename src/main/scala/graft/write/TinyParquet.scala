@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.types._
 
 /** Driver-side writer for TINY parquet segments (system-table ledger
   * rows: `_dlt_loads`, `_dlt_version`, `_dlt_pipeline_state`).
@@ -33,8 +34,10 @@ object TinyParquet {
   final case class LCell(v: Long) extends Cell
   final case class DCell(v: Double) extends Cell
 
-  /** Write `rows` (uniform `(name, cell)` sequences) to `path`. */
-  def write(path: Path, rows: Seq[Seq[(String, Cell)]]): Unit = {
+  /** Write `rows` (uniform `(name, cell)` sequences) to `path`. Returns
+    * the Spark schema a parquet read of the file infers (every field
+    * nullable), which [[TableStore]] records in the manifest. */
+  def write(path: Path, rows: Seq[Seq[(String, Cell)]]): StructType = {
     require(rows.nonEmpty, "TinyParquet.write needs at least one row")
     val cols = rows.head.map(_._1)
     require(rows.forall(_.map(_._1) == cols), "rows must share one schema")
@@ -66,6 +69,14 @@ object TinyParquet {
       }
       writer.write(g)
     } finally writer.close()
+    StructType(rows.head.map { case (n, c) =>
+      StructField(n, c match {
+        case _: SCell => StringType
+        case _: ICell => IntegerType
+        case _: LCell => LongType
+        case _: DCell => DoubleType
+      })
+    })
   }
 
   /** Driver-side READ of one tiny parquet file — the other half of the

@@ -37,6 +37,11 @@ class PipelineSpec extends SparkSpec {
     assert(root.filter($"k" === "a").select("v").as[String].head() == "v2")
     val items = p.store.read("docs__items")
     assert(items.select("value").as[Long].collect().sorted.toSeq == Seq(3L, 9L))
+    // every segment and tombstone the load wrote carries its schema, so
+    // a fresh store plans each table's read without a footer job
+    val fresh = new graft.write.TableStore(p.root, spark)
+    assert(fresh.tables.contains("docs__items") && fresh.tables.contains("_dlt_version"))
+    fresh.tables.foreach(t => assert(countJobs(fresh.read(t))._2 === 0, t))
   }
 
   test("incremental resource processes each row exactly once across runs") {

@@ -466,38 +466,6 @@ class VectorSinkSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  private def countJobs[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      drainListenerBus() // deterministic drain: events deliver async
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  /** `LiveListenerBus.waitUntilEmpty` is private[spark] — reach it via
-    * reflection (a fixed sleep would make the zero-jobs assertion
-    * timing-dependent); falls back to a sleep if the internals move. */
-  private def drainListenerBus(): Unit = try {
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-      .invoke(spark.sparkContext)
-    val ms = bus.getClass.getMethods
-    ms.find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .map(_.invoke(bus))
-      .orElse(ms.find(m => m.getName == "waitUntilEmpty" &&
-          m.getParameterCount == 1)
-        .map(_.invoke(bus, java.lang.Long.valueOf(10000L))))
-      .getOrElse(Thread.sleep(500))
-    ()
-  } catch { case _: ReflectiveOperationException => Thread.sleep(500) }
-
   test("the skew check reads the manifest census — zero Spark jobs, no corpus scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsspec14").toString
     val store = new TableStore(dir, spark)
@@ -522,14 +490,14 @@ class VectorSinkSpec extends SparkSpec {
       VectorSink.delete(store, "emb", ids, "vec_id")
     }
     assert(n === 10L)
-    // measured breakdown: distinct-count (2-3 AQE stages), the
-    // column-existence footer check (1 — reads footers, O(#segments)
-    // not O(rows)), the tombstone id-file distinct+write (2-3). All
-    // batch- or metadata-sized; a corpus DATA scan would add
-    // corpus-proportional stages on top of this fixed handful
+    // measured breakdown: distinct-count (2-3 AQE stages) and the
+    // tombstone id-file distinct+write (2-3); the column-existence
+    // check reads the manifest's schema (no job). All batch-sized; a
+    // corpus DATA scan would add corpus-proportional stages on top of
+    // this fixed handful
     assert(jobs <= 8,
       s"delete launched $jobs jobs — it must stay O(ids): distinct count " +
-        "+ footer check + tombstone write, never a corpus scan")
+        "+ tombstone write, never a corpus scan")
   }
 
   test("append refuses a corpus head orphaned by an interrupted swap") {

@@ -398,4 +398,188 @@ class WriteSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("tombstones"))
   }
+
+  // --- schema-carrying manifests ---
+
+  private def segmentPaths(store: TableStore, t: String): Seq[String] =
+    store.segments(t).map(s => java.nio.file.Paths.get(store.root, t, s.name).toString)
+
+  private def currentManifest(store: TableStore, t: String): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(store.root, t)
+    dir.resolve(new String(Files.readAllBytes(dir.resolve("_CURRENT")), "UTF-8").trim)
+  }
+
+  /** Rows with columns in name order: parquet's `mergeSchema` read
+    * merges footers in file-path order (random segment uuids), the
+    * manifest in commit order, so only the field SET is comparable. */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(df.columns.sorted.map(c => col(s"`$c`")): _*)
+      .collect().map(_.toString).sorted.toSeq
+
+  private def fieldsByName(s: org.apache.spark.sql.types.StructType) =
+    s.fields.sortBy(_.name).toSeq
+
+  /** `t` with a merge, an evolved column and two tombstone generations. */
+  private def evolvedTombstoned(store: TableStore): Unit = {
+    val d = dispo(store)
+    val cfg = MergeConfig(primaryKey = Seq("id"))
+    d.merge("t", load1.toDF("id", "v", "ver"), cfg, "1")
+    d.merge("t", load2.toDF("id", "v", "ver"), cfg, "2")
+    store.appendWithTombstone("t",
+      Seq((5L, "e", 3, "x")).toDF("id", "v", "ver", "extra"), "id",
+      Seq(Tuple1(1L)).toDF("id"))
+    store.deleteByIds("t", "id", Seq(Tuple1(5L), Tuple1(2L)).toDF("id"))
+    store.append("t", Seq(("y", 6L)).toDF("extra", "id"))
+  }
+
+  test("a fresh store plans a merged, tombstoned table's read with zero Spark jobs") {
+    val store = newStore()
+    evolvedTombstoned(store)
+    val fresh = new TableStore(store.root, spark)
+    val (df, jobs) = countJobs(fresh.read("t"))
+    assert(jobs === 0, s"planning store.read launched $jobs Spark jobs")
+    assert(df.select("id").as[Long].collect().sorted === Array(3L, 4L, 6L))
+    // time travel plans from the manifest too
+    val (_, atJobs) = countJobs(fresh.readAt("t", fresh.snapshots("t").head))
+    assert(atJobs === 0)
+  }
+
+  test("an evolved table's schema and rows equal the mergeSchema read") {
+    val store = newStore()
+    store.append("t", Seq((1L, "a")).toDF("id", "v"))
+    store.append("t", Seq((2L, "b", 2.5)).toDF("id", "v", "w"))
+    store.append("t", Seq((Seq(1, 2), 3L)).toDF("arr", "id"))
+    val inferred = spark.read.option("mergeSchema", "true")
+      .parquet(segmentPaths(store, "t"): _*)
+    val fresh = new TableStore(store.root, spark)
+    assert(fieldsByName(fresh.read("t").schema) === fieldsByName(inferred.schema))
+    // ... and the manifest's merge follows commit order
+    assert(fresh.read("t").schema.fieldNames.toSeq === Seq("id", "v", "w", "arr"))
+    assert(sortedRows(fresh.read("t")) === sortedRows(inferred))
+  }
+
+  test("store.schema equals the read's schema, field order included, " +
+      "on an evolved and tombstoned table") {
+    val store = newStore()
+    evolvedTombstoned(store)
+    val read = store.read("t")
+    assert(store.tombstones("t").size === 2)
+    assert(store.schema("t") === read.schema)
+    assert(store.schema("t").fieldNames.toSeq ===
+      Seq("id", "v", "ver", "_dlt_load_id", "extra"))
+    assert(countJobs(store.schema("t"))._2 === 0)
+  }
+
+  test("a manifest without schema lines still reads through the footer fallback") {
+    val store = newStore()
+    evolvedTombstoned(store)
+    val expected = sortedRows(store.read("t"))
+    val expectedSchema = store.read("t").schema
+    // rewrite the current manifest in the pre-schema grammar: no `@`
+    // lines, no trailing schema id on segment and tombstone lines
+    val m = currentManifest(store, "t")
+    val legacy = new String(Files.readAllBytes(m), "UTF-8").split("\n")
+      .filterNot(_.startsWith("@")).map { l =>
+        val parts = l.split("\t", -1).dropRight(1)
+        if (l.startsWith("!")) parts.mkString("\t")
+        else parts.mkString("\t").stripSuffix("\t")
+      }
+    Files.write(m, legacy.mkString("\n").getBytes("UTF-8"))
+    val fresh = new TableStore(store.root, spark)
+    assert(fresh.segments("t").forall(_.schema.isEmpty))
+    assert(fresh.tombstones("t").forall(_.schema.isEmpty))
+    assert(sortedRows(fresh.read("t")) === expected)
+    assert(fieldsByName(fresh.read("t").schema) === fieldsByName(expectedSchema))
+    assert(fresh.schema("t") === fresh.read("t").schema)
+    // the next commit carries the legacy segments over as they are
+    fresh.append("t", Seq((7L, "g")).toDF("id", "v"))
+    assert(fresh.read("t").count() === expected.size + 1)
+  }
+
+  test("a field carrying metadata round-trips through the JSON schema line") {
+    val store = newStore()
+    val meta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("unit", "ms").putLong("scale", 3L).build()
+    store.append("t", Seq((1L, 10L)).toDF("id", "lat")
+      .select($"id", $"lat".as("lat", meta)))
+    val lines = new String(Files.readAllBytes(currentManifest(store, "t")), "UTF-8")
+      .split("\n")
+    assert(lines.exists(_.startsWith("@\t0\tj\t")), lines.mkString("\n"))
+    val fresh = new TableStore(store.root, spark)
+    assert(fresh.read("t").schema("lat").metadata === meta)
+    assert(fresh.read("t").schema ===
+      spark.read.parquet(segmentPaths(store, "t"): _*).schema)
+    // a plain schema is stored as DDL
+    store.append("plain", Seq((1L, "a")).toDF("id", "v"))
+    assert(new String(Files.readAllBytes(currentManifest(store, "plain")), "UTF-8")
+      .startsWith("@\t0\td\t"))
+  }
+
+  test("a TinyParquet ledger segment records the schema a parquet read infers") {
+    val store = newStore()
+    import TinyParquet._
+    store.appendDriverFile("cfg")(p => TinyParquet.write(p, Seq(Seq(
+      "name" -> SCell("a"), "n" -> ICell(7), "snap" -> LCell(42L),
+      "frac" -> DCell(0.25)))))
+    val file = segmentPaths(store, "cfg").head
+    assert(store.segments("cfg").head.schema === Some(spark.read.parquet(file).schema))
+    assert(store.schema("cfg") === spark.read.parquet(file).schema)
+  }
+
+  test("one group's tombstones on one column are one scan: k generations, " +
+      "at most k tombstone scans") {
+    val store = newStore()
+    store.append("t", (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"))
+    val k = 4
+    (1 to k).foreach { g =>
+      store.appendWithTombstone("t", Seq((100L + g, s"n$g")).toDF("id", "v"),
+        "id", Seq(Tuple1(g.toLong)).toDF("id"))
+    }
+    val df = store.read("t")
+    val scans = df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    val tombScans = scans.count(_.relation.location.rootPaths
+      .exists(_.getName.endsWith("-tomb")))
+    assert(tombScans <= k, s"$tombScans tombstone scans for $k generations")
+    assert(df.select("id").as[Long].collect().sorted ===
+      ((5L to 10L) ++ (101L to 104L)).toArray)
+  }
+
+  test("a missing manifest or a malformed schema line fails loudly") {
+    val store = newStore()
+    store.append("t", Seq((1L, "a")).toDF("id", "v"))
+    val m = currentManifest(store, "t")
+    val body = Files.readAllBytes(m)
+    Files.write(m, new String(body, "UTF-8").replaceFirst("\td\t", "\td\tnot a ddl <")
+      .getBytes("UTF-8"))
+    val bad = intercept[IllegalStateException](store.read("t"))
+    assert(bad.getMessage.contains(m.getFileName.toString), bad.getMessage)
+    Files.delete(m)
+    val missing = intercept[IllegalStateException](store.read("t"))
+    assert(missing.getMessage.contains(m.getFileName.toString), missing.getMessage)
+    intercept[IllegalStateException](store.segments("t"))
+  }
+
+  test("ledger bookkeeping runs no Spark job; versions stay max+1 after compact") {
+    val store = newStore()
+    val d = dispo(store)
+    (1 to 3).foreach { i =>
+      d.recordState("p", s"load$i", s"""{"i":$i}""")
+      d.recordVersion("s", s"h$i", "{}")
+    }
+    val (_, jobs) = countJobs {
+      d.recordState("p", "load4", """{"i":4}""")
+      d.recordVersion("s", "h4", "{}")
+      dispo(store).recordVersion("s", "h2", "{}") // known hash: no new row
+    }
+    assert(jobs === 0, s"ledger bookkeeping launched $jobs Spark jobs")
+    def versions(t: String) =
+      store.readDriverRows(t).map(_("version").asInstanceOf[Long]).sorted
+    assert(versions(d.StateTable) === Seq(1L, 2L, 3L, 4L))
+    assert(versions(d.VersionTable) === Seq(1L, 2L, 3L, 4L))
+    assert(store.compact(d.StateTable, maxSegments = 1))
+    d.recordState("p", "load5", """{"i":5}""")
+    assert(versions(d.StateTable) === Seq(1L, 2L, 3L, 4L, 5L))
+  }
 }
